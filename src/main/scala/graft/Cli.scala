@@ -151,8 +151,8 @@ object DailyLoad {
   * airflow` takes `ds` from the env; `--mode manual` takes it from the
   * first positional arg (the reference prompts on stdin,
   * `history_load.py:18-22` — an arg is the non-interactive form).
-  * Disables auto-broadcast so the merge's only broadcast is the
-  * explicit tombstone hint (`history_load.py:40`).
+  * Disables auto-broadcast as the reference does (`history_load.py:40`);
+  * the merge itself plans no join, only one exchange on the key.
   */
 object HistoryLoad {
   def main(args: Array[String]): Unit = {

@@ -682,7 +682,7 @@ object SparkEntry {
                                   format: String = "parquet"): graft.model.TableSpec = {
     import graft.jobs.Jobs
     import graft.sources.RawSource
-    val root = s"/root/repo/target/tmp/$name-${java.util.UUID.randomUUID()}"
+    val root = graft.session.Sessions.scratchPath(s"$name-${java.util.UUID.randomUUID()}")
     cdcEvents(s, dir).select(
       col("timestamp"),
       to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"),
@@ -691,6 +691,9 @@ object SparkEntry {
     val spec = graft.model.TableSpec(name, "graft_db", Seq("user_id"),
       s"$root/lake", s"$root/ckpt", "topic", format = format)
     Jobs.rawIngest(RawSource.fileStream(s, s"$root/in"), spec)
+    // the source and checkpoint are spent; the lake backs the returned
+    // lazy frame, so it goes with the session scratch
+    Seq("in", "ckpt").foreach(d => graft.session.Sessions.rmTree(new java.io.File(root, d)))
     spec
   }
 
@@ -851,9 +854,9 @@ object SparkEntry {
     }),
 
     "cdc_full_merge" -> ((s, dir) => {
-      val r = routed(s, dir)
-      CdcOps.mergeBatch(CdcOps.emptyLike(r.inserts), r, Seq("user_id"),
-        Seq("timestamp", "event_id"))
+      val ev = cdcEvents(s, dir)
+      CdcOps.mergeBatch(CdcOps.emptyLike(ev.drop(CdcOps.metaColumns: _*)), ev,
+        Seq("user_id"), Seq("timestamp", "event_id"))
     }),
 
     "cdc_fold_merge" -> ((s, dir) =>
@@ -4385,12 +4388,15 @@ object SparkEntry {
           .otherwise("u").as("op"),
         to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"))).as("payload")
       ).as[StreamingUpsert.KeyedEvent]
-      val root = s"/root/repo/target/tmp/fsink-${java.util.UUID.randomUUID()}"
-      StreamingUpsert.upsertToLog(keyed, s"$root/log", s"$root/ckpt")
-      StreamingUpsert.compactLog(s, s"$root/log"): Unit
-      StreamingUpsert.readCurrent(s, s"$root/log",
-        StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE, props STRING"))
-        .localCheckpoint(true)
+      val root = graft.session.Sessions.scratchPath(s"fsink-${java.util.UUID.randomUUID()}")
+      // the eager checkpoint holds the result, so the log can go at once
+      try {
+        StreamingUpsert.upsertToLog(keyed, s"$root/log", s"$root/ckpt")
+        StreamingUpsert.compactLog(s, s"$root/log"): Unit
+        StreamingUpsert.readCurrent(s, s"$root/log",
+          StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE, props STRING"))
+          .localCheckpoint(true)
+      } finally graft.session.Sessions.rmTree(new java.io.File(root))
     }),
 
     // Event-time windowed streaming aggregation with watermark — the

@@ -3,7 +3,6 @@ package graft.jobs
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.TableSpec
@@ -40,24 +39,30 @@ object Jobs {
   }
 
   /** One day's parsed, sanitized change events (S6, S7, P2-P4). Returns
-    * None when the day's partition is empty (the "no new data" case the
+    * None when the day has no events (the "no new data" case the
     * reference detects by catching AnalysisException on the missing
-    * path, `daily_data_handler.py:39-41` — with partition-pruned reads
-    * an empty day is just an empty frame, no exception control flow).
+    * path, `daily_data_handler.py:39-41`). An empty day is told by its
+    * inferred payload schema, which is empty: the inference pass the
+    * parse needs anyway doubles as the probe, and the parse reuses its
+    * schema, so the day is scanned once before the merge.
     */
   def readDayEvents(spark: SparkSession, spec: TableSpec, ds: LocalDate,
-                    lowerNames: Boolean = false): Option[DataFrame] = {
+                    lowerNames: Boolean = false): Option[DataFrame] =
     // a raw root that doesn't exist yet (merge scheduled before the
     // first ingest trigger) is "no new data", not an error — the one
     // missing-path case the reference's blanket except covered
     if (!Lake.pathExists(spark, spec.dataDir)) None
-    else {
-      val day = Lake.readDay(spark, spec.dataDir, ds.getYear,
-        ds.getMonthValue, ds.getDayOfMonth, spec.format)
-        .drop(Lake.partitionColumns: _*)
-      if (day.isEmpty) None
-      else Some(parseRaw(day, lowerNames))
-    }
+    else parseNonEmpty(Lake.readDay(spark, spec.dataDir, ds.getYear,
+      ds.getMonthValue, ds.getDayOfMonth, spec.format), lowerNames)
+
+  /** Infer the payload schema of a raw read once; None when it is empty
+    * (no events), else the events parsed with it.
+    */
+  private def parseNonEmpty(raw: DataFrame, lowerNames: Boolean): Option[DataFrame] = {
+    val envelopes = raw.drop(Lake.partitionColumns: _*)
+    val schema = CdcOps.inferPayloadSchema(envelopes)
+    if (schema.isEmpty) None
+    else Some(parseRaw(envelopes, lowerNames, graft.schema.SchemaProvider.Declared(schema)))
   }
 
   /** Parse a raw `(timestamp, value)` frame: resolve the payload schema
@@ -100,63 +105,42 @@ object Jobs {
       case _ =>
         val wrote =
           if (Lake.tableExists(spark, spec.historyTable))
+            // no full-row distinct of the events first: the merge's
+            // closing distinct, and LWW over identical rows, give the
+            // same table without it
             readDayEvents(spark, spec, ds.minusDays(1), lowered).map { ev =>
-              mergeInto(spark, spec, spec.historyTable, ev.distinct())
+              mergeInto(spark, spec, spec.historyTable, ev)
             }.isDefined
-          else {
+          else if (!Lake.pathExists(spark, spec.dataDir)) false
+          else
             // Backfill: the whole raw log arrives as ONE batch, where the
             // reference's merge would keep every historical insert row for
             // a key alongside its latest update (inserts are only
             // tombstoned across batches, `daily_data_handler.py:88-101`).
             // A from-scratch rebuild has cleaner correct semantics: the
             // LWW fold of the full event log. Deliberate divergence.
-            if (!Lake.pathExists(spark, spec.dataDir)) false
-            else {
-              val all = Lake.readAll(spark, spec.dataDir, spec.format)
-                .drop(Lake.partitionColumns: _*)
-              if (all.isEmpty) false
-              else {
-                val folded = CdcOps.foldMerge(
-                  parseRaw(all, lowered).distinct(), spec.primaryKeys, spec.orderColumns)
-                Lake.overwriteTableSafely(folded, spec.historyTable, format = spec.format)
-                true
-              }
-            }
-          }
+            // Exact duplicate events need no distinct: LWW keeps one.
+            parseNonEmpty(Lake.readAll(spark, spec.dataDir, spec.format), lowered).map { all =>
+              val folded = CdcOps.foldMerge(all, spec.primaryKeys, spec.orderColumns)
+              Lake.overwriteTableSafely(folded, spec.historyTable, format = spec.format)
+            }.isDefined
         if (wrote && Lake.tableExists(spark, spec.dailyTable))
           Lake.truncateTable(spark, spec.dailyTable)
     }
   }
 
   /** Shared merge core (`_overwrite_daily_table`,
-    * `daily_data_handler.py:75-104`): route ops, LWW-dedup updates,
-    * anti-join out tombstoned keys, union, overwrite.
+    * `daily_data_handler.py:75-104`): [[CdcOps.mergeBatch]] of the
+    * events into the table's current rows — one key exchange, no probe
+    * job — then the safe overwrite.
     */
   private def mergeInto(spark: SparkSession, spec: TableSpec,
                         table: String, events: DataFrame): Unit = {
-    // Cache HERE, above any caller-side distinct(), so the routed
-    // counts below and the merge itself all read one materialization
-    // (a cache below the distinct would re-run the distinct shuffle
-    // per action); released once the merge has written.
-    val ev = events.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val routed = CdcOps.routeOps(ev, spec.primaryKeys)
-      val existing =
-        if (Lake.tableExists(spark, table)) spark.table(table)
-        else CdcOps.emptyLike(routed.inserts)
-      // Tombstones past the broadcast budget switch the merge to the
-      // bloom-pruned anti-join (no full-table exchange of `existing`).
-      // |updates| + |deletes| upper-bounds the tombstone count; one
-      // cache-backed scan computes both counts.
-      val limit = spark.conf.getOption("graft.cdc.tombstoneBroadcastLimit")
-        .map(_.toLong).getOrElse(1L << 22)
-      val beyond = routed.updates.select(lit(1L).as("__one"))
-        .unionByName(routed.deleteKeys.select(lit(1L).as("__one")))
-        .count() > limit
-      val merged = CdcOps.mergeBatch(existing, routed, spec.primaryKeys,
-        spec.orderColumns, tombstonesBeyondBroadcast = beyond)
-      Lake.overwriteTableSafely(merged, table, format = spec.format)
-    } finally ev.unpersist(blocking = false)
+    val existing =
+      if (Lake.tableExists(spark, table)) spark.table(table)
+      else CdcOps.emptyLike(events.drop(CdcOps.metaColumns: _*))
+    Lake.overwriteTableSafely(
+      CdcOps.mergeBatch(existing, events, spec.primaryKeys, spec.orderColumns),
+      table, format = spec.format)
   }
 }

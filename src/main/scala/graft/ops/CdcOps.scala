@@ -13,7 +13,7 @@ import graft.model.OpCode
   * reference pipeline (SURVEY.md §2). Each function cites the reference
   * behavior it covers. All are lazy plan builders — no actions — so
   * Catalyst sees the whole merge as one plan and can push filters into
-  * the scan, prune columns, and plan the anti-join as a broadcast.
+  * the scan, prune columns, and run it on a single key exchange.
   */
 object CdcOps {
 
@@ -26,7 +26,8 @@ object CdcOps {
   // -------------------------------------------------------------------
 
   /** P1 — cast projection of the Kafka record
-    * (`raw_data_handler.py:51`).
+    * (`raw_data_handler.py:51`). With the date partitions it is the raw
+    * layer's schema, declared once as `Lake.rawSchema`.
     */
   def castEnvelope(df: DataFrame): DataFrame =
     df.select(col("timestamp").cast("timestamp"), col("value").cast("string"))
@@ -178,15 +179,15 @@ object CdcOps {
   // Merge (J1, A4, A5, P7)
   // -------------------------------------------------------------------
 
-  /** J1 — the heart of the merge: broadcast LEFT ANTI join that removes
-    * from the existing table every row whose PK appears in the tombstone
-    * set (deletes ∪ update-keys) (`daily_data_handler.py:88-95`,
-    * `history_data_handler.py:124-131`).
+  /** J1 — broadcast LEFT ANTI join that removes from `existing` every
+    * row whose PK appears in `tombstoneKeys` — the reference's merge
+    * step (`daily_data_handler.py:88-95`, `history_data_handler.py:124-131`)
+    * as a standalone operator. [[mergeBatch]] does not use it: there the
+    * tombstone test rides the one key exchange the merge already pays.
     *
-    * Scale note: the existing table is the 100 TB side; the tombstones
-    * are one batch's keys. Broadcasting the tombstones means the scan of
-    * the existing table never shuffles — the same reasoning as the
-    * reference's explicit `f.broadcast()` with auto-broadcast disabled
+    * Scale note: broadcasting the tombstones means the scan of
+    * `existing` never shuffles — the same reasoning as the reference's
+    * explicit `f.broadcast()` with auto-broadcast disabled
     * (`history_load.py:40`).
     */
   def antiJoinByKey(existing: DataFrame, tombstoneKeys: DataFrame,
@@ -195,9 +196,9 @@ object CdcOps {
 
   /** J1 at beyond-broadcast scale: bloom-filter-pruned LEFT ANTI join.
     *
-    * [[antiJoinByKey]] broadcasts the tombstones — right until one batch's
+    * [[antiJoinByKey]] broadcasts the tombstones — right until the
     * tombstone set outgrows the broadcast budget, at which point Spark
-    * falls back to shuffling the ENTIRE existing table (the 100 TB side).
+    * falls back to shuffling the ENTIRE existing side.
     * This variant keeps that cliff from mattering: build a bloom filter
     * over the tombstone keys with `bloom_filter_agg` (a distributed
     * aggregate — only the fixed-size sketch ever reaches the driver),
@@ -246,35 +247,58 @@ object CdcOps {
         .join(tombstoneKeys, primaryKeys, "left_anti"))
   }
 
-  /** The full batch merge (`_overwrite_daily_table`,
-    * `daily_data_handler.py:75-104`):
+  /** The batch merge (`_overwrite_daily_table`,
+    * `daily_data_handler.py:75-104`).
+    * `events` are parsed change events carrying [[OpColumn]]; the
+    * contract is the reference's
     *
     * {{{
-    * merged = (existing ∖ (deletes ∪ updateKeys)) ∪ inserts ∪ LWW(updates)
+    * merged = distinct((existing ∖ (deleteKeys ∪ keys(updates)))
+    *                   ∪ inserts ∪ LWW(updates))
     * }}}
     *
-    * then full-row dedup (A4+A5). `unionByName` with missing-column
-    * tolerance replaces the reference's positional re-select (P7,
-    * `daily_data_handler.py:94,99-100`) — it survives the schema drift
-    * the positional union would silently corrupt (SURVEY §7.4.1).
+    * with its quirks: an insert survives even when its key is
+    * tombstoned in the same batch, a key with a null column never
+    * tombstones (equi-join semantics), unknown or null op codes are
+    * dropped, and columns align by name with missing ones null
+    * (`unionByName(allowMissingColumns)` replaces the reference's
+    * positional re-select, P7 — it survives the schema drift the
+    * positional union would silently corrupt, SURVEY §7.4.1).
+    *
+    * Planned as ONE hash exchange on the key: `existing` rows (op tag
+    * null) and the day's events are unioned and co-partitioned, then one
+    * sorted window per key answers both questions — "is the key
+    * tombstoned" (any update or delete with a fully non-null key) and
+    * "which update is the latest" (`row_number`, updates first, then
+    * `orderColumns` desc). The kept rows are the untombstoned existing
+    * ones, every insert and the latest update. The closing full-row
+    * distinct needs no second exchange: hash(pk) already clusters every
+    * set of columns that contains the key.
     */
-  def mergeBatch(existing: DataFrame, routed: Routed,
+  def mergeBatch(existing: DataFrame, events: DataFrame,
                  primaryKeys: Seq[String],
-                 orderColumns: Seq[String] = Seq("timestamp"),
-                 tombstonesBeyondBroadcast: Boolean = false): DataFrame = {
-    val dedupedUpdates = lastWriterWins(routed.updates, primaryKeys, orderColumns)
-    val tombstones = routed.deleteKeys
-      .unionByName(dedupedUpdates.select(primaryKeys.map(col): _*))
-    // one batch's tombstones normally broadcast; past the broadcast
-    // budget the bloom-pruned variant keeps the existing (100 TB) side
-    // from shuffling wholesale — identical result either way
-    val kept =
-      if (tombstonesBeyondBroadcast)
-        bloomPrunedAntiJoin(existing, tombstones, primaryKeys)
-      else antiJoinByKey(existing, tombstones, primaryKeys)
-    kept
-      .unionByName(routed.inserts, allowMissingColumns = true)
-      .unionByName(dedupedUpdates, allowMissingColumns = true)
+                 orderColumns: Seq[String] = Seq("timestamp")): DataFrame = {
+    val op = col(OpColumn)
+    val isUpdate = col("__upd")
+    val known = OpCode.insertCodes ++ Seq(OpCode.Update, OpCode.Delete)
+    // one ordering for both window functions, so they share one sort
+    val byKey = Window.partitionBy(primaryKeys.map(col): _*)
+      .orderBy(isUpdate.desc +: orderColumns.map(c => col(c).desc): _*)
+    val wholeKey = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val tombstones = (isUpdate || op === OpCode.Delete) &&
+      primaryKeys.map(col(_).isNotNull).reduce(_ && _)
+    // key columns first, where the reference's anti-join leaves them
+    val keys = primaryKeys.flatMap(k => existing.columns.find(_.equalsIgnoreCase(k)))
+    def quoted(c: String) = col(s"`${c.replace("`", "``")}`")
+    existing.select((keys ++ existing.columns.filterNot(keys.contains)).map(quoted): _*)
+      .withColumn(OpColumn, lit(null).cast("string"))
+      .unionByName(events.filter(op.isin(known: _*)), allowMissingColumns = true)
+      .withColumn("__upd", op === OpCode.Update)
+      .withColumn("__tomb", max(when(tombstones, 1).otherwise(0)).over(wholeKey))
+      .withColumn("__rn", row_number().over(byKey))
+      .filter((op.isNull && col("__tomb") === 0) || op.isin(OpCode.insertCodes: _*) ||
+        (isUpdate && col("__rn") === 1))
+      .drop(metaColumns ++ Seq("__upd", "__tomb", "__rn"): _*)
       .dropDuplicates()
   }
 

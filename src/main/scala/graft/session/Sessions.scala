@@ -68,6 +68,12 @@ object Sessions {
     "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString
   )
 
+  /** Delete a file or directory tree; best effort. */
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(): Unit
+  }
+
   /** Scratch root for shuffle spills and streaming checkpoints: prefer
     * RAM-backed /dev/shm when writable — stateful streaming commits
     * hundreds of small state-store files per micro-batch, which cost
@@ -75,11 +81,6 @@ object Sessions {
     * to java.io.tmpdir. Unique per JVM; removed on exit (checkpoints
     * resolved under a conf root are not auto-deleted by Spark).
     */
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(): Unit
-  }
-
   private lazy val scratchRoot: String = {
     val shm = new java.io.File("/dev/shm")
     val base = if (shm.isDirectory && shm.canWrite) shm

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Lake-layer IO: partitioned file writes, catalog tables, safe
   * overwrite. Covers SURVEY §2.1 S5, S6, S8, S9, S10.
@@ -9,6 +10,13 @@ import org.apache.spark.sql.functions._
 object Lake {
 
   val partitionColumns: Seq[String] = Seq("op_year", "op_month", "op_day")
+
+  /** The raw layer's schema: the envelope as `CdcOps.castEnvelope`
+    * projects it, then [[partitionColumns]]. Raw reads declare it, so no
+    * job reads file footers to infer it.
+    */
+  val rawSchema: StructType = StructType.fromDDL(
+    "timestamp TIMESTAMP, value STRING, op_year INT, op_month INT, op_day INT")
 
   /** S5 — date-partitioned append write of the raw layer
     * (`raw_data_handler.py:77-87`). Parquet by default (ORC in the
@@ -129,13 +137,6 @@ object Lake {
       .drop("__z")
       .write.mode(SaveMode.Append).format(format).save(dir)
 
-  /** S6 — read one day of the raw layer. The reference constructs the
-    * partition path by hand (`daily_data_handler.py:51-58`); here the
-    * table root is read and Catalyst partition-prunes the filter — the
-    * plan's scan shows `PartitionFilters`, no full listing of other
-    * days' files — which also keeps partition columns in the result and
-    * composes with predicate pushdown.
-    */
   /** Does the data directory exist yet? First deployments run the merge
     * schedule before the first ingest trigger ever creates the raw
     * root — readers use this to treat "no directory" as "no data"
@@ -147,14 +148,21 @@ object Lake {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** S6 — read one day of the raw layer. The reference constructs the
+    * partition path by hand (`daily_data_handler.py:51-58`); here the
+    * table root is read and Catalyst partition-prunes the filter — the
+    * plan's scan shows `PartitionFilters`, no full listing of other
+    * days' files — which also keeps partition columns in the result and
+    * composes with predicate pushdown. The schema is [[rawSchema]].
+    */
   def readDay(spark: SparkSession, dir: String, year: Int, month: Int, day: Int,
               format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(dir)
+    spark.read.format(format).schema(rawSchema).load(dir)
       .where(col("op_year") === year && col("op_month") === month && col("op_day") === day)
 
   /** Full-history read (backfill path, `history_data_handler.py:77-81`). */
   def readAll(spark: SparkSession, dir: String, format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(dir)
+    spark.read.format(format).schema(rawSchema).load(dir)
 
   /** S9/S10 — catalog helpers (public Scala APIs; the reference needed a
     * private `_jsparkSession` bridge only because of its PySpark

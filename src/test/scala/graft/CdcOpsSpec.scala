@@ -57,11 +57,9 @@ class CdcOpsSpec extends AnyFunSuite {
       script.slice(5, 6), script.slice(6, 7), script.slice(7, 8),
       script.slice(8, 9), script.slice(9, 10))
     var table = CdcOps.emptyLike(frame(Nil).drop(CdcOps.metaColumns: _*))
-    for (b <- batches) {
-      val routed = CdcOps.routeOps(frame(b), Seq("ID"))
-      table = CdcOps.mergeBatch(table, routed, Seq("ID"), Seq("timestamp"))
+    for (b <- batches)
+      table = CdcOps.mergeBatch(table, frame(b), Seq("ID"), Seq("timestamp"))
         .localCheckpoint(true)
-    }
     assert(stateOf(table) == expected)
     // delete of an absent key (t8) was a no-op; re-insert after delete won
     assert(table.count() == 4)
@@ -120,12 +118,10 @@ class CdcOpsSpec extends AnyFunSuite {
   test("schema drift: mergeBatch survives a new column appearing (unionByName)") {
     val day1 = frame(script.take(2)) // ID, PRODUCT
     val t1 = CdcOps.mergeBatch(
-      CdcOps.emptyLike(day1.drop(CdcOps.metaColumns: _*)),
-      CdcOps.routeOps(day1, Seq("ID")), Seq("ID"), Seq("timestamp"))
+      CdcOps.emptyLike(day1.drop(CdcOps.metaColumns: _*)), day1, Seq("ID"), Seq("timestamp"))
     val day2 = Seq((ts(3), "u", "false", "1", "LOAN", "0.05"))
       .toDF("timestamp", "__op", "__deleted", "ID", "PRODUCT", "RATE")
-    val t2 = CdcOps.mergeBatch(t1, CdcOps.routeOps(day2, Seq("ID")),
-      Seq("ID"), Seq("timestamp"))
+    val t2 = CdcOps.mergeBatch(t1, day2, Seq("ID"), Seq("timestamp"))
     assert(t2.columns.contains("RATE"))
     val rates = t2.select($"ID", $"RATE").collect()
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap

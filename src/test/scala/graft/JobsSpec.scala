@@ -4,6 +4,9 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDate
 
+import org.apache.spark.TestListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -176,33 +179,101 @@ class JobsSpec extends AnyFunSuite {
     assert(spark.table(spec.dailyTable).count() == 0)
   }
 
-  test("daily merge takes the bloom-pruned path when tombstones exceed " +
-      "the broadcast limit, with identical results") {
-    val root = tmp("bloommerge")
-    val spec = TableSpec("bacct", "graft_db", Seq("ID"),
-      s"$root/lake", s"$root/ckpt", "topic")
+  /** Spark jobs submitted while `body` runs, told apart from any other
+    * thread's by a job group. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, "counted")
+    try { body; TestListenerDrain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(counter) }
+    n.get
+  }
+
+  /** A merge-pipeline spec with its tables dropped and `days` of
+    * envelopes landed in its raw lake. */
+  private def landed(name: String, days: Seq[(Timestamp, String)]*): TableSpec = {
+    val root = tmp(name)
+    val spec = TableSpec(name, "graft_db", Seq("ID"), s"$root/lake", s"$root/ckpt", "topic")
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_db")
     spark.sql(s"DROP TABLE IF EXISTS ${spec.dailyTable}")
+    spark.sql(s"DROP TABLE IF EXISTS ${spec.historyTable}")
+    days.foreach(d => Lake.appendPartitioned(
+      graft.ops.CdcOps.withDatePartitions(d.toDF("timestamp", "value")), spec.dataDir))
+    spec
+  }
 
-    val day1 = (1 to 50).map(i => envelope(ts(1, i % 60), "c", s"$i", s"P$i"))
-    val day2 = (1 to 30).map(i => envelope(ts(2, i % 60), "u", s"$i", s"Q$i")) ++
-      (31 to 40).map(i => envelope(ts(2, i % 60), "d", s"$i", null))
-    Lake.appendPartitioned(
-      graft.ops.CdcOps.withDatePartitions(day1.toDF("timestamp", "value")), spec.dataDir)
-    Lake.appendPartitioned(
-      graft.ops.CdcOps.withDatePartitions(day2.toDF("timestamp", "value")), spec.dataDir)
-
-    // limit 0: every batch counts as beyond-broadcast → bloom path e2e
-    spark.conf.set("graft.cdc.tombstoneBroadcastLimit", "0")
-    try {
-      Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
-      Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
-    } finally spark.conf.unset("graft.cdc.tombstoneBroadcastLimit")
+  test("daily merge equals the merge contract across two days") {
+    def env(t: Timestamp, op: String, id: String, region: String, product: String,
+            risk: Option[String] = None) = {
+      def str(v: String) = if (v == null) "null" else s""""$v""""
+      (t, s"""{"ID":${str(id)},"REGION":${str(region)},"PRODUCT":${str(product)},""" +
+        risk.fold("")(r => s""""RISK/SCORE":"$r",""") +
+        s""""__op":${str(op)},"__deleted":"false"}""")
+    }
+    val day1 = Seq(
+      env(ts(1, 1), "r", "1", "eu", "LOAN"), env(ts(1, 2), "c", "2", "eu", "CARD"),
+      env(ts(1, 3), "c", "2", "us", "CARD"), env(ts(1, 4), "c", null, "eu", "ORPHAN"),
+      env(ts(1, 5), "c", "3", null, "HALF"), env(ts(1, 6), "c", "4", "eu", "FX"),
+      env(ts(1, 6), "c", "4", "eu", "FX")) // exact duplicate
+    val day2 = Seq(
+      env(ts(2, 1), "u", "1", "eu", "SAVINGS", Some("0.1")),
+      env(ts(2, 3), "u", "1", "eu", "DEPOSIT", Some("0.2")), // newest update wins,
+      env(ts(2, 10), "c", "1", "eu", "LOAN2"),               // even under a later insert
+      env(ts(2, 2), "d", "2", "eu", null),
+      env(ts(2, 4), "c", "2", "eu", "CARD2"),                // re-insert after delete
+      env(ts(2, 5), "d", null, "eu", null),                  // null keys never tombstone
+      env(ts(2, 6), "u", "3", null, "HALF2"),
+      env(ts(2, 7), "x", "4", "eu", "UNKNOWN"),              // unknown and null ops drop
+      env(ts(2, 8), null, "4", "eu", "NULLOP"),
+      env(ts(2, 9), "u", "5", "eu", "NEW", Some("0.3")),
+      env(ts(2, 9), "u", "5", "eu", "NEW", Some("0.3")))
+    val spec = landed("contract", day1, day2).copy(primaryKeys = Seq("ID", "REGION"))
+    val days = Seq(LocalDate.of(2024, 1, 1), LocalDate.of(2024, 1, 2))
+    val want = days.foldLeft(Option.empty[DataFrame]) { (state, d) =>
+      val ev = Jobs.readDayEvents(spark, spec, d).get
+      val existing = state.getOrElse(graft.ops.CdcOps.emptyLike(ev.drop(graft.ops.CdcOps.metaColumns: _*)))
+      Some(MergePropertySpec.contract(existing, ev, spec.primaryKeys, spec.orderColumns)
+        .localCheckpoint(true))
+    }.get
+    days.foreach(Jobs.dailyMerge(spark, spec, _))
     val got = spark.table(spec.dailyTable)
-      .select($"ID", $"PRODUCT").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val want = (1 to 30).map(i => s"$i" -> s"Q$i").toMap ++
-      (41 to 50).map(i => s"$i" -> s"P$i").toMap
-    assert(got == want)
+    assert(MergePropertySpec.same(got, want),
+      s"got:\n${got.collect().mkString("\n")}\nwant:\n${want.collect().mkString("\n")}")
+    assert(got.columns.contains("RISK_SCORE"))
+  }
+
+  test("a merge runs at most four Spark jobs") {
+    val spec = landed("jobcount",
+      Seq(envelope(ts(1, 1), "r", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD")),
+      Seq(envelope(ts(2, 1), "u", "1", "DEPOSIT"), envelope(ts(2, 2), "d", "2", null),
+        envelope(ts(2, 3), "c", "3", "BOND")),
+      Seq(envelope(ts(3, 1), "u", "3", "FX")))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+    val daily = jobsDuring(Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2)))
+    val history = jobsDuring(Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 4)))
+    assert(daily <= 4, s"daily merge ran $daily Spark jobs")
+    assert(history <= 4, s"history merge ran $history Spark jobs")
+  }
+
+  test("a merge of an absent day writes nothing and does not throw") {
+    val spec = landed("emptyday",
+      Seq(envelope(ts(1, 1), "c", "1", "LOAN")), Seq(envelope(ts(3, 1), "c", "2", "CARD")))
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
+    assert(!Lake.tableExists(spark, spec.dailyTable))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill of the whole log
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3)) // ds-1 = Jan 2, absent
+    assert(spark.table(spec.historyTable).count() == 2)
+    assert(spark.table(spec.dailyTable).count() == 1) // no merge, so no truncate
   }
 
   test("history increment mode appends deduplicated rows") {
